@@ -465,8 +465,12 @@ class Project:
                     "rows_affected observation for %s unavailable: %s", name, e
                 )
         if run_tests and model.tests:
+            t1 = time.perf_counter()
             results[name] = run_model_tests(
                 self.relations[name], model.tests, name, store_dir=store_dir
+            )
+            self.last_run_results[name]["test_execution_time"] = round(
+                time.perf_counter() - t1, 3
             )
             failed = [r for r in results[name] if r.status == "error"]
             if failed and on_test_failure == "raise":

@@ -13,12 +13,12 @@ We add the dbt_utils-style tests the project declares but never uses
 thresholds, and ``store_failures`` (violations persisted for audit) — the
 dbt-core knobs a real project sets in its schema YAML.
 
-Scale posture: every default-config test is compiled to a *violations
-DataFrame* and executed via ``.isEmpty()`` — Spark's ``limit(1)``-based probe
-— so a failing test on a 100 TB table short-circuits instead of scanning
-everything.  Violation *counts* are computed only when a non-default
-threshold (or a failure needing diagnostics) requires them; ``sample_limit``
-rows are collected only on non-pass, for diagnostics.
+Scale posture: each row-level test (``not_null``, ``accepted_values``,
+``accepted_range``, ``finite``) is one violating-row predicate, and a model's
+row-level tests are all counted in ONE pass, ``df.agg(count_if(p_1), ...)``,
+instead of a job per test; ``unique``, ``unique_combination`` and
+``relationships`` pay one ``count()`` each.  Every count is exact;
+``sample_limit`` rows are collected only on non-pass, for diagnostics.
 """
 
 from __future__ import annotations
@@ -38,54 +38,64 @@ class DataTest(Protocol):
     def describe(self) -> str: ...
 
 
-@dataclass(frozen=True)
-class NotNull:
-    column: str
+class RowTest:
+    """A test whose violations are exactly the rows matching :meth:`predicate`."""
+
+    def predicate(self) -> Column:
+        raise NotImplementedError
 
     def violations(self, df: DataFrame) -> DataFrame:
-        return df.filter(F.col(self.column).isNull())
+        return df.filter(self.predicate())
+
+
+@dataclass(frozen=True)
+class NotNull(RowTest):
+    column: str
+
+    def predicate(self) -> Column:
+        return F.col(self.column).isNull()
 
     def describe(self) -> str:
         return f"not_null({self.column})"
 
 
 @dataclass(frozen=True)
-class AcceptedValues:
+class AcceptedValues(RowTest):
     column: str
     values: tuple = ()
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def predicate(self) -> Column:
         # dbt compiles this to `where col not in (...)`; NULLs are not
         # violations of accepted_values (they're not_null's job).
         c = F.col(self.column)
-        return df.filter(c.isNotNull() & ~c.isin(list(self.values)))
+        return c.isNotNull() & ~c.isin(list(self.values))
 
     def describe(self) -> str:
         return f"accepted_values({self.column} in {list(self.values)})"
 
 
 @dataclass(frozen=True)
-class AcceptedRange:
+class AcceptedRange(RowTest):
     column: str
     min_value: float | None = None
     max_value: float | None = None
     inclusive: bool = True
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def predicate(self) -> Column:
         c = F.col(self.column)
         cond: Column = F.lit(False)
         if self.min_value is not None:
             cond = cond | (c < self.min_value if self.inclusive else c <= self.min_value)
         if self.max_value is not None:
             cond = cond | (c > self.max_value if self.inclusive else c >= self.max_value)
-        return df.filter(c.isNotNull() & cond)
+        return c.isNotNull() & cond
 
     def describe(self) -> str:
         return f"accepted_range({self.column} in [{self.min_value}, {self.max_value}])"
 
 
 @dataclass(frozen=True)
-class Finite:
+class Finite(RowTest):
     """Floating-point hygiene gate: NaN and ±Infinity in a measure column.
 
     The engine's money/measure arithmetic uses the int64 micro-unit cast
@@ -100,9 +110,9 @@ class Finite:
 
     column: str
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def predicate(self) -> Column:
         c = F.col(self.column)
-        return df.filter(c.isNotNull() & (F.isnan(c) | (F.abs(c) == float("inf"))))
+        return c.isNotNull() & (F.isnan(c) | (F.abs(c) == float("inf")))
 
     def describe(self) -> str:
         return f"finite({self.column})"
@@ -207,26 +217,16 @@ class TestResult:
     passed: bool  # True unless status == "error" (dbt: warn is still a pass)
     sample: list | None = None
     status: str = "pass"  # "pass" | "warn" | "error"
-    failures: int | None = None  # violation count (None when not computed)
+    failures: int = 0  # exact violation count
 
 
 _DEFAULT_CONFIG = TestConfig()
 
 
 def _evaluate(
-    t, df: DataFrame, model_name: str, sample_limit: int, store_dir: str | None
+    t, df: DataFrame, n: int, model_name: str, sample_limit: int, store_dir: str | None
 ) -> TestResult:
     cfg = t.config if isinstance(t, ConfiguredTest) else _DEFAULT_CONFIG
-    v = t.violations(df)
-    default_thresholds = cfg.warn_if == ">0" and cfg.error_if == ">0"
-    if default_thresholds and not cfg.store_failures:
-        # fast path: limit(1)-style probe, short-circuits on first violation;
-        # the full count is only paid on failure (diagnostics)
-        if v.isEmpty():
-            return TestResult(model_name, t.describe(), True)
-        n = v.count()
-    else:
-        n = v.count()
     # dbt status routing: error_if fires only under severity=error; warn_if
     # can fire under either severity.
     if cfg.severity == "error" and eval_threshold(cfg.error_if, n):
@@ -237,10 +237,11 @@ def _evaluate(
         status = "pass"
     sample = None
     if status != "pass":
-        sample = [r.asDict() for r in v.limit(sample_limit).collect()]
-    if cfg.store_failures and store_dir and (n or 0) > 0:
+        sample = [r.asDict() for r in t.violations(df).limit(sample_limit).collect()]
+    if cfg.store_failures and store_dir and n > 0:
         safe = re.sub(r"[^A-Za-z0-9_]+", "_", t.describe())[:120]
-        v.write.mode("overwrite").parquet(os.path.join(store_dir, f"{model_name}__{safe}"))
+        out = os.path.join(store_dir, f"{model_name}__{safe}")
+        t.violations(df).write.mode("overwrite").parquet(out)
     return TestResult(model_name, t.describe(), status != "error", sample, status, n)
 
 
@@ -251,17 +252,12 @@ def run_model_tests(
     sample_limit: int = 5,
     store_dir: str | None = None,
 ) -> list[TestResult]:
-    return [_evaluate(t, df, model_name, sample_limit, store_dir) for t in tests]
-
-
-def run_tests(project, spark=None) -> list[TestResult]:
-    """Run every registered model's tests against its built relation."""
-    out: list[TestResult] = []
-    for name, model in project.models.items():
-        if not model.tests:
-            continue
-        df = project.relations.get(name)
-        if df is None:
-            continue
-        out.extend(run_model_tests(df, model.tests, name))
-    return out
+    """Results in input order; all row-level tests share one aggregate job."""
+    inner = [t.test if isinstance(t, ConfiguredTest) else t for t in tests]
+    fused = [i for i, t in enumerate(inner) if isinstance(t, RowTest)]
+    counts = {}
+    if fused:
+        row = df.agg(*(F.count_if(inner[i].predicate()).alias(f"t{i}") for i in fused)).first()
+        counts = dict(zip(fused, row))
+    ns = [counts[i] if i in counts else t.violations(df).count() for i, t in enumerate(tests)]
+    return [_evaluate(t, df, n, model_name, sample_limit, store_dir) for t, n in zip(tests, ns)]

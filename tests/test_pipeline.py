@@ -350,9 +350,14 @@ def test_severity_and_thresholds(spark):
     from pyspark.sql import Row
 
     from dbt_trill_shop_spark.core.testing import (
+        AcceptedRange,
+        AcceptedValues,
         ConfiguredTest,
+        Finite,
         NotNull,
+        Relationships,
         TestConfig,
+        Unique,
         run_model_tests,
     )
 
@@ -399,6 +404,93 @@ def test_severity_and_thresholds(spark):
     stored = [x for x in os.listdir(d) if x.startswith("m__")]
     assert len(stored) == 1
     assert spark.read.parquet(os.path.join(d, stored[0])).count() == 2
+
+    # the fused count_if pass agrees with each test's own violations()
+    # count on NULLs, NaN, +-inf and values on/beyond both bounds, and a
+    # mixed list keeps input order and status routing
+    inf, nan = float("inf"), float("nan")
+    xs = [None, nan, inf, -inf, -1.0, 0.0, 5.0, 10.0, 11.0, 5.0]
+    ss = ["a", None, "b", "z", "a", "", "b", None, "a", "q"]
+    frame = spark.createDataFrame(
+        [Row(k=i % 8, x=x, s=v) for i, (x, v) in enumerate(zip(xs, ss))],
+        "k bigint, x double, s string",
+    )
+    parent = spark.createDataFrame([Row(id=i) for i in range(6)], "id bigint")
+    mixed = [
+        NotNull("x"),
+        NotNull("k"),
+        Unique("k"),
+        AcceptedValues("s", ("a", "b")),
+        AcceptedRange("x", 0.0, 10.0),
+        Relationships("k", to=parent, to_column="id"),
+        AcceptedRange("x", 0.0, 10.0, inclusive=False),
+        AcceptedRange("x", min_value=0.0),
+        AcceptedRange("x", max_value=10.0, inclusive=False),
+        Finite("x"),
+        ConfiguredTest(AcceptedValues("s", ("a", "b", "")), TestConfig(severity="warn")),
+        ConfiguredTest(Finite("x"), TestConfig(error_if=">5", warn_if=">2")),
+    ]
+    got = run_model_tests(frame, mixed, "m")
+    assert [r.test for r in got] == [t.describe() for t in mixed]
+    want = [t.violations(frame).count() for t in mixed]
+    assert [r.failures for r in got] == want
+    # hand-counted: NaN sorts above every double, so it breaks max bounds
+    assert want == [1, 0, 2, 3, 5, 2, 7, 2, 4, 3, 2, 3]
+    assert [r.status for r in got] == [
+        "error", "pass", "error", "error", "error", "error",
+        "error", "error", "error", "error", "warn", "warn",
+    ]
+    for r, t in zip(got, mixed):
+        assert r.passed == (r.status != "error")
+        assert (r.sample is None) == (r.status == "pass")
+        assert r.sample is None or len(r.sample) == min(5, t.violations(frame).count())
+
+
+def test_row_level_tests_share_one_job(spark):
+    """All of a model's row-level tests cost the jobs of one: 7 tests on a
+    frame issue exactly as many Spark jobs as 1 (compared, not pinned —
+    AQE runs each query stage as its own job)."""
+    import uuid
+
+    from dbt_trill_shop_spark.core.testing import (
+        AcceptedRange,
+        AcceptedValues,
+        ConfiguredTest,
+        Finite,
+        NotNull,
+        TestConfig,
+        run_model_tests,
+    )
+
+    # nullable columns, so no predicate folds away to an empty plan
+    df = spark.range(1000).selectExpr("IF(id = -1, NULL, id) AS id")
+    df = df.selectExpr("id", "id % 7 AS m", "CAST(id AS DOUBLE) AS x")
+    seven = [
+        NotNull("id"),
+        NotNull("m"),
+        AcceptedValues("m", tuple(range(7))),
+        AcceptedRange("x", 0.0, 999.0),
+        AcceptedRange("m", -1, 7, inclusive=False),
+        Finite("x"),
+        ConfiguredTest(NotNull("x"), TestConfig(severity="warn")),
+    ]
+    sc = spark.sparkContext
+
+    def jobs(tests) -> tuple[int, list[int]]:
+        gid = f"fused_{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, gid)
+        try:
+            results = run_model_tests(df, tests, "m")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(results) == len(tests)
+        return len(sc.statusTracker().getJobIdsForGroup(gid)), [r.failures for r in results]
+
+    one, _ = jobs(seven[:1])
+    many, failures = jobs(seven)
+    assert one >= 1 and many == one
+    assert failures == [0] * 7  # all pass: no sample-collect jobs
 
 
 def test_build_test_failure_routing(spark, sf_dir):
@@ -588,8 +680,10 @@ def test_write_artifacts(built_project, tmp_path):
     assert len(model_entries) == 7
     assert all(e["status"] == "success" for e in model_entries)
     assert all(e["execution_time"] >= 0 for e in model_entries)
+    assert all(e["test_execution_time"] >= 0 for e in model_entries)
     assert len(test_entries) == 68
     assert all(e["status"] == "pass" for e in test_entries)
+    assert all(e["failures"] == 0 for e in test_entries)
 
 
 def test_source_freshness(spark, sf_dir):
