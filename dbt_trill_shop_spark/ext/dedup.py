@@ -10,9 +10,12 @@
 - SimHash: 64-bit fingerprint from token hashes; near-dups = pairs whose
   fingerprints match on at least one of 4 16-bit bands (Hamming<=3-ish
   recall), joined band-wise — again no cross join.
-- exact n-gram Jaccard / asymmetric containment: common-shingle joins
-  (documents only meet if they share a shingle), shingle relation
-  checkpointed once.
+- exact n-gram Jaccard / asymmetric containment, and the exact verify of
+  every candidate pipeline: one set-overlap kernel
+  (``dbt_trill_shop_spark/overlap.py``) over each document's checkpointed
+  shingle hashes, all-pairs (documents only meet if they share a shingle)
+  or keyed by a candidate-pair relation; its DuckDB twin builds the
+  oracles.
 - native banded MinHash: signature pipeline + exact-Jaccard verification of
   candidates only (false-positive-free).
 - connected components over the pair graph -> dedup groups; canonical-doc
@@ -25,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..localrel import values_relation
+from ..overlap import jaccard_at_least, overlap_ctes, rounded_ratio, set_overlap
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -178,61 +182,15 @@ def _distinct_shingle_rel(docs: DataFrame, text_col: str, id_col: str, n: int) -
     return base.select(F.col(id_col), F.explode(F.array_distinct(arr)).alias("s"))
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_len: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """EXACT n-gram Jaccard similarity for every pair above ``threshold``.
-
-    Scale shape: pairs are generated by a join on the shingle value — only
-    documents *sharing a shingle* ever meet, so the plan is
-    explode -> shuffle on shingle -> count pairs, never an O(n^2) cross join.
-    The shuffle key is the 8-byte xxhash64 of the shingle, not the string
-    (collision odds ~ |shingles|^2 / 2^64 — negligible; the docstring of the
-    oracle uses raw strings, which is the same modulo that epsilon).
-    Jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) over *distinct* shingle sets,
-    rounded to 9 dp so the division is cross-engine stable.
-    """
-    sh = _distinct_shingle_rel(docs, text_col, id_col, shingle_len).select(
-        id_col, F.xxhash64("s").alias("sh")
-    )
-    # materialize the shingle relation once (CTE-MATERIALIZED semantics):
-    # it feeds the sizes agg AND both self-join sides, and the explode is the
-    # single most expensive stage — lazy, it would run 3x (43% slower e2e)
-    sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 9
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-NGRAM_JACCARD_SQL_TEMPLATE = r"""
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(text, '\s+') AS tokens FROM documents
+def _shingles_sql(n, source: str = "documents", name: str = "shingles") -> str:
+    """DuckDB ``toks -> {name}`` CTE pair (no leading ``WITH``): each
+    document's DISTINCT word ``n``-gram shingles, the oracle twin of
+    :func:`_distinct_shingle_rel`.  ``n`` may be the ``"{n}"`` placeholder
+    of a ``.format`` template."""
+    return rf"""toks AS (
+    SELECT doc_id, regexp_split_to_array(text, '\s+') AS tokens FROM {source}
 ),
-shingles AS (
+{name} AS (
     SELECT DISTINCT doc_id, s
     FROM (
         SELECT doc_id,
@@ -243,20 +201,48 @@ shingles AS (
         FROM toks
     ) t
     WHERE s <> ''
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-    FROM shingles a JOIN shingles b USING (s)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
+)"""
+
+
+def _shingle_hashes(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(id, sh): each document's distinct shingles as 8-byte xxhash64 keys
+    (collision odds ~ |shingles|² / 2⁶⁴; the oracles use the raw strings),
+    materialized once: the relation feeds the sizes agg AND both join sides
+    of ``set_overlap``, and lazy the explode would run 3x (43% slower e2e)."""
+    return (
+        _distinct_shingle_rel(docs, text_col, id_col, n)
+        .select(id_col, F.xxhash64("s").alias("sh"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_len: int = 3,
+    threshold: float = 0.2,
+) -> DataFrame:
+    """EXACT n-gram Jaccard similarity for every pair above ``threshold``.
+
+    Jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) over *distinct* shingle sets,
+    rounded to 9 dp (:func:`~dbt_trill_shop_spark.overlap.jaccard_at_least`).
+    Scale shape: the all-pairs :func:`~dbt_trill_shop_spark.overlap.set_overlap`
+    joins on the shingle hash — only documents *sharing a shingle* ever
+    meet, so the plan is explode -> shuffle on shingle -> count pairs, never
+    an O(n^2) cross join, and the shuffle key is 8 bytes, never text.
+    """
+    sh = _shingle_hashes(docs, text_col, id_col, shingle_len)
+    return jaccard_at_least(set_overlap(sh, id_col, "sh"), threshold)
+
+
+NGRAM_JACCARD_SQL_TEMPLATE = f"""
+WITH {_shingles_sql('{n}')},
+{overlap_ctes('shingles', 'doc_id', 's')}
 SELECT id_a, id_b,
-       ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 9) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 9) >= {threshold}
+       ROUND(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 9) AS jaccard
+FROM overlap
+WHERE ROUND(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 9) >= {{threshold}}
 """
 
 
@@ -545,27 +531,42 @@ def neardup_minhash_native(
 ) -> DataFrame:
     """Production-shaped near-dup pipeline (C4/Gopher recipe, public):
     banded-MinHash candidate generation -> EXACT n-gram Jaccard verification
-    of only the candidate pairs.  Output: (id_a, id_b, jaccard) above
-    threshold.  False-positive-free (exact verify); false negatives bounded
-    by the (b, r) S-curve.  All JVM-side Column ops; the exact verify joins
-    shingles only for candidate docs (left_semi prefilter)."""
+    of only the candidate pairs (:func:`_verify_candidates`).  Output:
+    (id_a, id_b, jaccard) above threshold.  False-positive-free (exact
+    verify); false negatives bounded by the (b, r) S-curve.  All JVM-side
+    Column ops."""
     sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_len)
     cands = minhash_banded_candidates(
         sigs, id_col, num_hashes, bands, min_band_matches
     )
-    # candidate pairs feed BOTH sides of the id union and the final verify
-    # join — materialize once or the signature pipeline runs 3x
+    # candidate pairs feed BOTH sides of the id union and the verify join —
+    # materialize once or the signature pipeline runs 3x
     cands = cands.localCheckpoint(eager=True)
+    return _verify_candidates(
+        docs, cands, text_col, id_col, shingle_len, jaccard_threshold
+    )
+
+
+def _verify_candidates(
+    docs: DataFrame, pairs: DataFrame, text_col: str, id_col: str,
+    shingle_len: int, threshold: float,
+) -> DataFrame:
+    """EXACT n-gram Jaccard verify of a distinct candidate-pair relation
+    (id_a, id_b): shingle only the documents some pair names (left_semi
+    prefilter), then the pairs-mode
+    :func:`~dbt_trill_shop_spark.overlap.set_overlap`, keyed by the
+    candidate pairs instead of re-deriving every pair sharing a shingle.
+    A pair survives iff it is a candidate AND its exact Jaccard passes
+    ``threshold``."""
     cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
+        pairs.select(F.col("id_a").alias(id_col))
+        .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    docs_sub = docs.join(cand_ids, id_col, "left_semi")
-    exact = ngram_jaccard_pairs(
-        docs_sub, text_col, id_col, shingle_len, threshold=jaccard_threshold
+    sh = _shingle_hashes(
+        docs.join(cand_ids, id_col, "left_semi"), text_col, id_col, shingle_len
     )
-    return exact.join(cands, ["id_a", "id_b"], "inner")
+    return jaccard_at_least(set_overlap(sh, id_col, "sh", pairs), threshold)
 
 
 def ngram_jaccard_pairs_filtered(
@@ -582,80 +583,31 @@ def ngram_jaccard_pairs_filtered(
     bounding the per-shingle join fan-out at max_doc_freq^2.  Jaccard is then
     computed over each document's *surviving* shingle set — deterministic, so
     still exactly oracle-checkable (the oracle mirrors the filter)."""
-    # materialize the exploded relation BEFORE deriving doc frequencies: it
-    # feeds the rare-shingle agg AND the semi join's left side, and lazy it
-    # would run the explode twice (11.6 s -> 6.4 s at sf0.1)
-    sh0 = (
-        _distinct_shingle_rel(docs, text_col, id_col, shingle_len)
-        .select(id_col, F.xxhash64("s").alias("sh"))
-        .localCheckpoint(eager=True)
-    )
+    # the materialized hashes feed the rare-shingle agg AND the semi join's
+    # left side; lazy, the explode would run twice (11.6 s -> 6.4 s at sf0.1)
+    sh0 = _shingle_hashes(docs, text_col, id_col, shingle_len)
     rare = sh0.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= max_doc_freq
     )
-    # materialize the surviving shingles once too (see ngram_jaccard_pairs) —
-    # downstream they feed the sizes agg and both self-join sides
+    # materialize the surviving shingles once too — they feed the sizes agg
+    # and both self-join sides of set_overlap
     sh = sh0.join(rare.select("sh"), "sh", "left_semi").localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 9
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_at_least(set_overlap(sh, id_col, "sh"), threshold)
 
 
-NGRAM_JACCARD_FILTERED_SQL_TEMPLATE = r"""
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(text, '\s+') AS tokens FROM documents
-),
-shingles0 AS (
-    SELECT DISTINCT doc_id, s
-    FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                   range(0, GREATEST(LEN(tokens) - {n}, 0) + 1),
-                   i -> array_to_string(tokens[i + 1 : i + {n}], ' ')
-               )) AS s
-        FROM toks
-    ) t
-    WHERE s <> ''
-),
+NGRAM_JACCARD_FILTERED_SQL_TEMPLATE = f"""
+WITH {_shingles_sql('{n}', name='shingles0')},
 rare AS (
-    SELECT s FROM shingles0 GROUP BY s HAVING COUNT(*) <= {max_doc_freq}
+    SELECT s FROM shingles0 GROUP BY s HAVING COUNT(*) <= {{max_doc_freq}}
 ),
 shingles AS (
     SELECT doc_id, s FROM shingles0 WHERE s IN (SELECT s FROM rare)
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-    FROM shingles a JOIN shingles b USING (s)
-    WHERE a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
+{overlap_ctes('shingles', 'doc_id', 's')}
 SELECT id_a, id_b,
-       ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 9) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = id_a
-JOIN sizes sb ON sb.doc_id = id_b
-WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 9) >= {threshold}
+       ROUND(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 9) AS jaccard
+FROM overlap
+WHERE ROUND(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 9) >= {{threshold}}
 """
 
 
@@ -935,51 +887,27 @@ def ngram_containment_pairs(
     containment) for every ordered pair above threshold, both directions
     scored independently.
 
-    Same common-shingle join shape as :func:`ngram_jaccard_pairs` (no cross
-    join; shingle relation checkpointed once); containment is an exact
-    integer ratio rounded to 9 dp.
+    Both directions come from ONE unordered all-pairs
+    :func:`~dbt_trill_shop_spark.overlap.set_overlap` row (a two-row
+    ``stack``), so the shingle self-join emits each pair once; containment
+    is an exact integer ratio rounded to 9 dp.
     """
-    sh = _distinct_shingle_rel(docs, text_col, id_col, shingle_len).select(
-        id_col, F.xxhash64("s").alias("sh")
+    ov = set_overlap(_shingle_hashes(docs, text_col, id_col, shingle_len), id_col, "sh")
+    both = ov.selectExpr(
+        "stack(2, id_a, id_b, n_a, id_b, id_a, n_b) AS (contained_id, container_id, n)",
+        "n_inter",
     )
-    sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "sh")
-    b = sh.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    return (
-        inter.join(sa, "id_a")
-        .select(
-            F.col("id_a").alias("contained_id"),
-            F.col("id_b").alias("container_id"),
-            F.round(F.col("n_inter") / F.col("n_a"), 9).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    return both.select(
+        "contained_id",
+        "container_id",
+        rounded_ratio(F.col("n_inter"), F.col("n")).alias("containment"),
+    ).filter(F.col("containment") >= threshold)
 
 
-NGRAM_CONTAINMENT_SQL_TEMPLATE = r"""
-WITH toks AS (
-    SELECT doc_id, regexp_split_to_array(text, '\s+') AS tokens FROM documents
-),
-shingles AS (
-    SELECT DISTINCT doc_id, s
-    FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                   range(0, GREATEST(LEN(tokens) - {n}, 0) + 1),
-                   i -> array_to_string(tokens[i + 1 : i + {n}], ' ')
-               )) AS s
-        FROM toks
-    ) t
-    WHERE s <> ''
-),
+# Deliberately NOT built on overlap_ctes: the ordered != self-join is the
+# independent check on the Spark side's both-directions-from-one-row form.
+NGRAM_CONTAINMENT_SQL_TEMPLATE = f"""
+WITH {_shingles_sql('{n}')},
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
 inter AS (
     SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -990,7 +918,7 @@ inter AS (
 SELECT id_a AS contained_id, id_b AS container_id,
        ROUND(CAST(n_inter AS DOUBLE) / sa.n_sh, 9) AS containment
 FROM inter JOIN sizes sa ON sa.doc_id = id_a
-WHERE ROUND(CAST(n_inter AS DOUBLE) / sa.n_sh, 9) >= {threshold}
+WHERE ROUND(CAST(n_inter AS DOUBLE) / sa.n_sh, 9) >= {{threshold}}
 """
 
 
@@ -1349,21 +1277,7 @@ def _minhash_md5_band_sql(
         )
         for b in range(bands)
     )
-    return rf"""toks AS (
-    SELECT doc_id, regexp_split_to_array(text, '\s+') AS tokens FROM {source}
-),
-shingles AS (
-    SELECT DISTINCT doc_id, s
-    FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                   range(0, GREATEST(LEN(tokens) - {shingle_len}, 0) + 1),
-                   i -> array_to_string(tokens[i + 1 : i + {shingle_len}], ' ')
-               )) AS s
-        FROM toks
-    ) t
-    WHERE s <> ''
-),
+    return _shingles_sql(shingle_len, source) + rf""",
 sigs AS (
     SELECT doc_id,
            {sig_cols}
@@ -1400,69 +1314,8 @@ def neardup_minhash_checked(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    docs_sub = docs.join(cand_ids, id_col, "left_semi")
-    # Verify PER CANDIDATE PAIR (the oracle's own join shape) instead of
-    # re-deriving every pair sharing a shingle among candidate docs and
-    # intersecting with `pairs` at the end: the shingle self-join's fan-out
-    # is Σ_shingle df² (quadratic in each common shingle's doc frequency —
-    # 4.09M rows for 6.6k trajectory docs at sf0.1), while keying by the
-    # banded pairs bounds it at Σ_pairs |shingles(a)| (1.12M rows there,
-    # 3.6× fewer) and can never blow up on a hub shingle the banding
-    # already declined to collide.  Same rows out: a pair survives iff it
-    # is banded-candidate AND exact-Jaccard ≥ threshold.
-    return _ngram_jaccard_for_pairs(
-        docs_sub, pairs, text_col, id_col, shingle_len, jaccard_threshold
-    )
-
-
-def _ngram_jaccard_for_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_len: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """EXACT n-gram Jaccard for a GIVEN candidate-pair relation (id_a,
-    id_b): attach side a's distinct shingle hashes to each pair, probe
-    side b's on (id_b, sh), count matches per pair — the shuffle carries
-    |pairs| × |shingles(a)| rows of three int64s, never the Σ df²
-    fan-out of the all-pairs-sharing-a-shingle self-join
-    (:func:`ngram_jaccard_pairs`), and never text.  A pair with an empty
-    intersection drops (no row survives the probe), exactly like the
-    self-join shape.  Jaccard and rounding identical to
-    :func:`ngram_jaccard_pairs`."""
-    sh = _distinct_shingle_rel(docs, text_col, id_col, shingle_len).select(
-        id_col, F.xxhash64("s").alias("sh")
-    )
-    # feeds the sizes agg AND both probe sides — materialize once, like
-    # the self-join variant does
-    sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 9
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _verify_candidates(
+        docs, pairs, text_col, id_col, shingle_len, jaccard_threshold
     )
 
 
@@ -1480,20 +1333,11 @@ cand AS (
     FROM banded a JOIN banded b ON a.bidx = b.bidx AND a.bk = b.bk
     WHERE a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-    FROM cand c
-    JOIN shingles a ON a.doc_id = c.id_a
-    JOIN shingles b ON b.doc_id = c.id_b AND b.s = a.s
-    GROUP BY c.id_a, c.id_b
-)
-SELECT i.id_a, i.id_b,
-       ROUND(CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter), 9) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.id_a
-JOIN sizes sb ON sb.doc_id = i.id_b
-WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= {jaccard_threshold}
+{overlap_ctes('shingles', 'doc_id', 's', 'cand')}
+SELECT id_a, id_b,
+       ROUND(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 9) AS jaccard
+FROM overlap
+WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= {jaccard_threshold}
 """
 
 
@@ -1995,27 +1839,16 @@ def minhash_estimate_audit(
     est = pairs.join(sa, "id_a").join(sb, "id_b").select(
         "id_a", "id_b", matches.alias("n_match")
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.select(F.col(id_col).alias("id_a"), "s")
-        .join(pairs, "id_a")
-        .join(
-            sh.select(F.col(id_col).alias("id_b"), F.col("s")),
-            ["id_b", "s"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    # a candidate pair sharing no shingle has no overlap row; its exact
+    # Jaccard is 0 (n_inter·10⁶ div union with n_inter = 0)
     out = (
-        est.join(inter, ["id_a", "id_b"], "left")
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb")), "id_b")
+        est.join(set_overlap(sh, id_col, "s", pairs), ["id_a", "id_b"], "left")
         .select(
             "id_a",
             "id_b",
             F.expr(f"n_match * 1000000 DIV {num_hashes}").alias("est_ppm"),
             F.expr(
-                "COALESCE(n_inter, 0) * 1000000 DIV (na + nb - COALESCE(n_inter, 0))"
+                "COALESCE(n_inter * 1000000 DIV (n_a + n_b - n_inter), 0)"
             ).alias("exact_ppm"),
         )
         .withColumn(
@@ -2030,6 +1863,8 @@ def minhash_estimate_audit(
 def minhash_estimate_audit_sql(
     num_hashes: int = 8, bands: int = 4, shingle_len: int = 3
 ) -> str:
+    # Deliberately NOT built on overlap_ctes: joining the sizes after the
+    # LEFT JOIN is the independent check on the Spark side's COALESCE form.
     base = _minhash_md5_band_sql(num_hashes, bands, shingle_len)
     match_expr = " + ".join(
         f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
@@ -3109,21 +2944,11 @@ cand AS (
     FROM banded a JOIN banded b ON a.bidx = b.bidx AND a.bk = b.bk
     WHERE a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM shingles GROUP BY doc_id),
-inter AS (
-    SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-    FROM cand c
-    JOIN shingles a ON a.doc_id = c.id_a
-    JOIN shingles b ON b.doc_id = c.id_b AND b.s = a.s
-    GROUP BY c.id_a, c.id_b
-)
-,
+{overlap_ctes('shingles', 'doc_id', 's', 'cand')},
 pairs AS (
-    SELECT i.id_a, i.id_b
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.id_a
-    JOIN sizes sb ON sb.doc_id = i.id_b
-    WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter)
+    SELECT id_a, id_b
+    FROM overlap
+    WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter)
           >= {jaccard_threshold}
 ),
 sym AS (

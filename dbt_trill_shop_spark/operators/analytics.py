@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..localrel import values_relation
+from ..overlap import overlap_ctes, set_overlap
 
 from ..catalog import load_table
 from ..functions import generate_surrogate_key
@@ -1582,31 +1583,20 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     user intersection and Jaccard similarity (ppm) — the retention/churn
     companion every analytics team computes.
 
-    Self-join ON user_id of the deduplicated (user, week) relation — pair
-    fan-out is |weeks|² per user (bounded by the calendar), never |events|²
-    — then per-pair counts join each week's size and Jaccard is integer ppm.
+    The all-pairs :func:`~dbt_trill_shop_spark.overlap.set_overlap` over
+    the deduplicated (user, week) relation, weeks as sets and users as
+    members — pair fan-out is |weeks|² per user (bounded by the calendar),
+    never |events|² — and Jaccard is integer ppm.
     """
     ev = load_table(spark, sf_dir, "events")
     uw = ev.select(
         "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("week")
     ).distinct()
-    sizes = uw.groupBy("week").agg(F.count(F.lit(1)).alias("n"))
-    a = uw.select("user_id", F.col("week").alias("week_a"))
-    b = uw.select("user_id", F.col("week").alias("week_b"))
-    inter = (
-        a.join(b, "user_id")
-        .filter(F.col("week_a") < F.col("week_b"))
-        .groupBy("week_a", "week_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("week").alias("week_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("week").alias("week_b"), F.col("n").alias("n_b"))
     return (
-        inter.join(F.broadcast(sa), "week_a")
-        .join(F.broadcast(sb), "week_b")
+        set_overlap(uw, "week", "user_id")
         .select(
-            "week_a",
-            "week_b",
+            F.col("id_a").alias("week_a"),
+            F.col("id_b").alias("week_b"),
             "n_inter",
             "n_a",
             "n_b",
@@ -1618,25 +1608,18 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUDIENCE_OVERLAP_SQL = """
+AUDIENCE_OVERLAP_SQL = f"""
 WITH uw AS (
     SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS week
     FROM events
 ),
-sizes AS (SELECT week, COUNT(*) AS n FROM uw GROUP BY week),
-inter AS (
-    SELECT a.week AS week_a, b.week AS week_b, COUNT(*) AS n_inter
-    FROM uw a JOIN uw b ON a.user_id = b.user_id AND a.week < b.week
-    GROUP BY a.week, b.week
-)
-SELECT week_a, week_b,
+{overlap_ctes("uw", "week", "user_id")}
+SELECT id_a AS week_a, id_b AS week_b,
        CAST(n_inter AS BIGINT) AS n_inter,
-       CAST(sa.n AS BIGINT) AS n_a,
-       CAST(sb.n AS BIGINT) AS n_b,
-       CAST(n_inter * 1000000 // (sa.n + sb.n - n_inter) AS BIGINT) AS jaccard_ppm
-FROM inter
-JOIN sizes sa ON sa.week = week_a
-JOIN sizes sb ON sb.week = week_b
+       CAST(n_a AS BIGINT) AS n_a,
+       CAST(n_b AS BIGINT) AS n_b,
+       CAST(n_inter * 1000000 // (n_a + n_b - n_inter) AS BIGINT) AS jaccard_ppm
+FROM overlap
 ORDER BY week_a, week_b
 """
 

@@ -1378,6 +1378,63 @@ def test_weighted_jaccard_downweights_common_shingles(spark):
     assert out.get((3, 4), 0) < 200_000
 
 
+def test_set_overlap_matches_python_sets(spark):
+    """The one set-overlap kernel against Python set arithmetic, in both
+    modes, on a members frame whose columns arrive as (member, set) — the
+    order a left_semi on the member leaves behind."""
+    from dbt_trill_shop_spark.overlap import set_overlap
+
+    sets = {1: {"a", "b", "c"}, 2: {"b", "c", "d", "e"}, 3: {"x"}, 4: {"a", "e"}}
+    members = spark.createDataFrame(
+        [(m, sid) for sid, ms in sets.items() for m in ms], "m string, sid long"
+    )
+
+    def expect(pairs):
+        return {
+            (a, b, len(sets[a] & sets[b]), len(sets[a]), len(sets[b]))
+            for a, b in pairs
+            if sets[a] & sets[b]
+        }
+
+    def got(df):
+        assert df.columns == ["id_a", "id_b", "n_inter", "n_a", "n_b"]
+        return {tuple(r) for r in df.collect()}
+
+    all_pairs = [(a, b) for a in sets for b in sets if a < b]
+    assert got(set_overlap(members, "sid", "m")) == expect(all_pairs)
+    # (1, 3) shares no member: pairs mode drops it like all-pairs mode does
+    cands = [(1, 2), (1, 3), (2, 4)]
+    pairs = spark.createDataFrame(cands, "id_a long, id_b long")
+    out = got(set_overlap(members, "sid", "m", pairs))
+    assert out == expect(cands) == {(1, 2, 2, 3, 4), (2, 4, 1, 4, 2)}
+
+
+def test_minhash_audit_keeps_candidate_without_common_shingle(spark):
+    """A banded candidate pair with an empty shingle intersection has no
+    set_overlap row; the audit's left join still reports it, exact_ppm 0.
+    The two one-shingle docs collide on the 32-bit md5 prefix the single
+    minwise component keeps: md5('0:w58337') and md5('0:w78261') both start
+    0b3e0fc3 (found by a birthday search over w0, w1, ...)."""
+    docs = spark.createDataFrame(
+        [(1, "w58337"), (2, "w78261")], "doc_id long, text string"
+    )
+    out = dedup.minhash_estimate_audit(docs, num_hashes=1, bands=1).collect()
+    assert [tuple(r) for r in out] == [(1, 2, 1_000_000, 0, 1_000_000)]
+
+
+def test_containment_scores_both_directions(spark):
+    """One unequal-size pair yields a containment row per direction, each
+    |A ∩ B| / |A| of its contained side."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d e f g h"), (3, "z")],
+        "doc_id long, text string",
+    )
+    out = dedup.ngram_containment_pairs(docs, shingle_len=1, threshold=0.0)
+    assert {tuple(r) for r in out.collect()} == {(1, 2, 1.0), (2, 1, 0.5)}
+    high = dedup.ngram_containment_pairs(docs, shingle_len=1, threshold=0.8)
+    assert [tuple(r) for r in high.collect()] == [(1, 2, 1.0)]
+
+
 def test_jaccard_curve_empty_pair_corpus(spark):
     """A corpus with no shared shingles must still emit all 7 thresholds
     with zero counts (the latent Spark-vs-oracle row-count divergence)."""

@@ -742,3 +742,85 @@ def test_twophase_nulls_and_quantile_bucket_match_naive(spark, rows):
         )
 
     assert rowset(naive) == rowset(two)
+
+
+# ---------------------------------------------------------------------------
+# The rounded overlap predicate against exact rational arithmetic.  Spark
+# compares round(ratio, 9) >= t; the checked oracles compare the unrounded
+# ratio.  Within jaccard_at_least's union bound (q·u <= 10⁹ for t = p/q) the
+# two keep exactly the same pairs; the draws sit within a few members of
+# each threshold the registry uses, at small unions and up to the bound.
+# ---------------------------------------------------------------------------
+
+JACCARD_THRESHOLDS = ("0.0", "0.2", "0.5", "0.85")
+CONTAINMENT_THRESHOLD = "0.8"
+
+
+def _boundary_draws(t: str):
+    """(u, step, split) draws: a denominator u within the union bound of
+    ``t``, a numerator offset from floor(t·u), and how the non-shared
+    members split between the two sets."""
+    from fractions import Fraction
+
+    bound = 10**9 // Fraction(t).denominator
+    return st.lists(
+        st.tuples(
+            st.one_of(
+                st.integers(1, 1000), st.integers(1, bound), st.just(bound)
+            ),
+            st.integers(-2, 2),
+            st.floats(0, 1),
+        ),
+        min_size=1,
+        max_size=12,
+    )
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    jac=st.tuples(*[_boundary_draws(t) for t in JACCARD_THRESHOLDS]),
+    con=_boundary_draws(CONTAINMENT_THRESHOLD),
+)
+def test_rounded_overlap_predicate_is_exact(spark, jac, con):
+    import math
+    from fractions import Fraction
+    from functools import reduce
+
+    from dbt_trill_shop_spark.overlap import jaccard_at_least, rounded_ratio
+
+    rows, want = [], set()  # (tag, id, n_inter, n_a, n_b); kept (tag, id)
+
+    def add(tag, t, u, step, split, exact):
+        inter = min(max(math.floor(Fraction(t) * u) + step, 0), u)
+        only_a = round(split * (u - inter))
+        n_a, n_b = inter + only_a, u - only_a  # n_a + n_b - inter == u
+        rows.append((tag, len(rows), inter, n_a, n_b))
+        if exact(inter, n_a, n_b) >= Fraction(t):
+            want.add((tag, len(rows) - 1))
+
+    for tag, (t, draws) in enumerate(zip(JACCARD_THRESHOLDS, jac)):
+        for u, step, split in draws:
+            add(tag, t, u, step, split, lambda i, a, b: Fraction(i, a + b - i))
+    c_tag = len(JACCARD_THRESHOLDS)
+    for u, step, _ in con:  # containment: u is |A|, B ⊆ A (split 1.0)
+        add(c_tag, CONTAINMENT_THRESHOLD, u, step, 1.0, lambda i, a, b: Fraction(i, a))
+    # spark.range keeps the rows on the generated-code path; a local
+    # relation would be folded away by the optimizer at planning time
+    df = spark.range(len(rows), numPartitions=1).select(*[
+        F.element_at(F.array(*[F.lit(r[i]) for r in rows]), F.col("id").cast("int") + 1)
+        .cast("bigint").alias(c)
+        for i, c in enumerate(("tag", "id", "n_inter", "n_a", "n_b"))
+    ])
+
+    def overlap(tag):
+        return df.filter(F.col("tag") == tag).select(
+            F.col("tag").alias("id_a"), F.col("id").alias("id_b"), "n_inter", "n_a", "n_b"
+        )
+
+    kept = [jaccard_at_least(overlap(k), float(t)) for k, t in enumerate(JACCARD_THRESHOLDS)]
+    contained = overlap(c_tag).filter(
+        rounded_ratio(F.col("n_inter"), F.col("n_a")) >= float(CONTAINMENT_THRESHOLD)
+    )
+    kept.append(contained.select("id_a", "id_b"))
+    got = reduce(lambda x, y: x.unionByName(y), [k.select("id_a", "id_b") for k in kept])
+    assert {(r.id_a, r.id_b) for r in got.collect()} == want
